@@ -122,6 +122,7 @@ def cmd_search(args) -> int:
     ``--count``/``--facets`` add the page's count and facet blocks."""
     import json
 
+    from dogsheep_beta_spark.operators.facets import count_and_facets
     from dogsheep_beta_spark.operators.fts_index import read_fts_index
     from dogsheep_beta_spark.plans.query import QueryPlan
     from dogsheep_beta_spark.plans.search import search_query
@@ -154,12 +155,12 @@ def cmd_search(args) -> int:
     for r in rows:
         d = r.asDict()
         print(json.dumps(d, default=str, sort_keys=True))
+    if args.count or args.facets:
+        n, facets = count_and_facets(result.filtered)
     if args.count:
-        n = result.filtered.count()
         print(json.dumps({"count": n}))
     if args.facets:
-        for name, fdf in result.facets.items():
-            vals = [v.asDict() for v in fdf.collect()]
+        for name, vals in facets.items():
             print(json.dumps({"facet": name, "values": vals}, default=str))
     return 0
 

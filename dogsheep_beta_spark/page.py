@@ -3,21 +3,22 @@
 ``templates/beta.html``), minus the HTTP server by design (SURVEY
 §7.0).
 
-``page_context`` runs ONE compiled request (results + count + facets
-off a single filtered set — collapsing the reference's dual execution
-path, __init__.py:85-86), hydrates and renders the ≤100 result rows,
-and builds the template context the reference hands to beta.html:
+``page_context`` runs ONE compiled request — results, then the count
+and all four facets as one ``GROUPING SETS`` aggregate, both off a
+single filtered set (collapsing the reference's dual execution path,
+__init__.py:85-86) — hydrates and renders the ≤100 result rows, and
+builds the template context the reference hands to beta.html:
 ``q / count / results / facets / hiddens / sorted_by /
 other_sort_orders`` (__init__.py:94-108).  ``render_page`` renders the
 beta.html structure (search form with hidden-field preservation,
 facet sidebar with toggle_url/selected, sort links, intcomma'd count
 — templates/beta.html:41-89) as a standalone HTML document.
 
-Everything here is presentation over collected rows and ≤30-row facet
-outputs: plain driver-side Python, zero Spark jobs beyond the request
-plan itself.  The reference's golden page assertions
-(reference tests/test_plugin.py:45-108, 119-230) are ported against
-this output in tests/test_page.py.
+Everything else here is presentation over collected rows and ≤30-row
+facet outputs: plain driver-side Python, zero Spark jobs beyond the
+results collect and the one aggregate.  The reference's golden page
+assertions (reference tests/test_plugin.py:45-108, 119-230) are ported
+against this output in tests/test_page.py.
 """
 
 from __future__ import annotations
@@ -139,21 +140,27 @@ def toggle_url(column: str, value: str, selected: bool, args: dict, q: str) -> s
     return "?" + urlencode(pairs)
 
 
-def build_page_facets(facet_dfs: dict, args: dict, q: str) -> list[dict]:
-    """The four facet blocks in reference order (type, category,
-    is_public, timestamp date — __init__.py:202-203), each value with
-    label / count / selected / toggle_url.
+def build_page_facets(
+    filtered: DataFrame, args: dict, q: str, facet_size: int = 30
+) -> tuple[int, list[dict]]:
+    """The page's count and its four facet blocks in reference order
+    (type, category, is_public, timestamp date — __init__.py:202-203),
+    each value with label / count / selected / toggle_url.  Both come
+    from one ``count_and_facets`` aggregate over ``filtered``.
 
     Labels: ``category`` is FK-expanded to its dimension name (C4 —
     Datasette renders ``created``, not ``1``; golden test_plugin.py:70);
     the date facet labels/filters as ``YYYY-MM-DD`` under the
     ``timestamp__date`` arg.  NULL facet values are excluded, matching
     Datasette's ColumnFacet/DateFacet."""
+    from dogsheep_beta_spark.operators.facets import count_and_facets
+
+    count, facet_rows = count_and_facets(filtered, facet_size)
     cat_names = {c["id"]: c["name"] for c in CATEGORIES}
     out = []
-    for name in ("type", "category", "is_public", "timestamp"):
+    for name, rows in facet_rows.items():
         results = []
-        for row in facet_dfs[name].collect():
+        for row in rows:
             value = row["value"]
             if value is None:
                 continue
@@ -176,7 +183,7 @@ def build_page_facets(facet_dfs: dict, args: dict, q: str) -> list[dict]:
                 }
             )
         out.append({"name": name, "results": results})
-    return out
+    return count, out
 
 
 def rules_templates(rules: dict) -> tuple[dict, dict]:
@@ -210,7 +217,6 @@ def page_context(
     search/facet execution, SURVEY §3.3); hydration is the batched
     display_sql join (C3), rendering the per-type Jinja pass (J1).
     """
-    from dogsheep_beta_spark.operators.facets import filtered_count
     from dogsheep_beta_spark.plans.hydrate import hydrate_results
     from dogsheep_beta_spark.plans.query import QueryPlan
     from dogsheep_beta_spark.plans.search import search_query
@@ -225,12 +231,12 @@ def page_context(
         is_public=args.get("is_public"),
         date=args.get("timestamp__date"),
     )
-    # compile_plan persists the filtered set for the request (SURVEY
-    # §7.5); the context manager is the teardown.
-    with search_query(index_df, fts, plan, facet_size=facet_size) as res:
+    # a search persists its filtered set for the results collect and
+    # the facet aggregate (SURVEY §7.5); the context manager is the
+    # teardown.
+    with search_query(index_df, fts, plan) as res:
         rows = [r.asDict() for r in res.results.collect()]
-        count = filtered_count(res.filtered)
-        facets = build_page_facets(res.facets, args, q)
+        count, facets = build_page_facets(res.filtered, args, q, facet_size)
     templates, display_sqls = rules_templates(rules or {})
     # q binds as the EMPTY STRING in timeline mode — the reference's
     # display_sql :q param is always present (__init__.py:123,161-168)

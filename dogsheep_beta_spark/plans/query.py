@@ -23,8 +23,7 @@ Semantics pinned by the reference:
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -120,74 +119,22 @@ def timeline_query(search_index: DataFrame, plan: QueryPlan) -> DataFrame:
     return order_results(filtered, plan, has_rank=False)
 
 
-class LazyFacets(Mapping):
-    """Facet DataFrames built on first access (r12, guide §1.2).
-
-    ``compile_plan`` used to construct all four facet DataFrames
-    eagerly for every request; each construction is ~3 analyzed JVM
-    plans, so a request path that never renders facets (the top-k
-    search/hydration/rerank consumers) paid ~12 analysis round-trips
-    per request for plans it threw away.  Any mapping access
-    (including iteration, ``len``, truthiness, ``dict(lf)`` /
-    ``{**lf}`` unpacking, ``==`` and ``copy``) materializes the full
-    facet dict once, so facet-consuming paths see the exact previous
-    behavior.
-
-    r13 (ADVICE r12): a ``collections.abc.Mapping`` WRAPPER, not a
-    dict subclass — CPython's C fast paths (``dict(lf)``, ``{**lf}``,
-    ``lf == {...}``, ``copy.copy``, ``json.dumps``) read a dict
-    subclass's internal storage directly, silently yielding an empty
-    mapping before the first build; a non-dict Mapping forces every
-    one of those through ``keys()``/``__getitem__`` (or an explicit
-    ``TypeError``), so no consumer idiom can observe the un-built
-    state."""
-
-    def __init__(self, builder):
-        self._builder = builder
-        self._built = False
-        self._data: dict = {}
-
-    def _ensure(self) -> None:
-        if not self._built:
-            self._built = True
-            self._data.update(self._builder())
-
-    def __getitem__(self, k):
-        self._ensure()
-        return self._data[k]
-
-    def __iter__(self):
-        self._ensure()
-        return iter(self._data)
-
-    def __len__(self):
-        self._ensure()
-        return len(self._data)
-
-    def copy(self) -> dict:
-        """Materialized plain-dict snapshot (also what ``copy.copy``
-        sees via ``__reduce__``-free protocols is not supported — use
-        this)."""
-        self._ensure()
-        return dict(self._data)
-
-
 @dataclass
 class QueryResult:
-    """All DataFrames for one request, derived from one filtered set.
+    """Both DataFrames for one request: the top-k results and the
+    filtered set they are cut from, which count and facets aggregate.
 
     When ``compile_plan(persist=True)`` built it, ``filtered`` is a
-    persisted DataFrame shared by results + count + 4 facets (+ any
-    hydration the caller adds): the filter/join subtree executes once
-    per request instead of once per consumed output (SURVEY §7.5).
+    persisted DataFrame shared by results + the count/facet aggregate
+    (+ any hydration the caller adds): the filter/join subtree executes
+    once per request instead of once per consumed output (SURVEY §7.5).
     ``unpersist()`` is the teardown hook — idempotent, safe to call
     whether or not the request path persisted anything; the class is
     also a context manager so request handlers can ``with`` it.
     """
 
     results: DataFrame
-    filtered: DataFrame  # for count
-    facets: dict[str, DataFrame] = field(default_factory=dict)
+    filtered: DataFrame  # for count and facets
     persisted: bool = False
 
     def unpersist(self) -> None:
@@ -207,29 +154,28 @@ def compile_plan(
     search_index: DataFrame,
     plan: QueryPlan,
     scored: DataFrame | None = None,
-    facet_size: int = 30,
     persist: bool = True,
 ) -> QueryResult:
-    """Compile a full request: results + count + 4 facets off one
-    filtered set (collapsing the reference's dual execution path,
+    """Compile a full request: the results and the filtered set that
+    count + 4 facets aggregate (``operators.facets.count_and_facets``),
+    one set for both (collapsing the reference's dual execution path,
     SURVEY §3.3).
 
     ``scored`` is the (type, key, rank) DataFrame from the FTS layer for
     search mode; None for timeline mode.
 
-    ``persist=True`` (the request-path default) persists the filtered
-    set so the scan→filter→score-join subtree runs ONCE per request no
-    matter how many of the outputs (results, count, facets, hydration)
-    the caller collects — the reference re-executes its WHERE clause
-    per output query instead (__init__.py:193-258).  Spark's cache
-    manager keys the entry on the canonicalized plan, so a repeated
-    identical request also reuses it.  Callers that consume exactly one
-    output (e.g. results only) should pass persist=False to keep the
-    top-k limit pushdown against the raw scan and skip the cache
-    bookkeeping.  Teardown: ``QueryResult.unpersist()``.
+    ``persist=True`` persists the filtered set so the
+    scan→filter→score-join subtree runs ONCE per request no matter how
+    many of the outputs (results, count, facets, hydration) the caller
+    collects (``search_query`` persists search requests only) — the
+    reference re-executes its WHERE clause per output query instead
+    (__init__.py:193-258).  Spark's cache manager keys the entry on the
+    canonicalized plan, so a repeated identical request also reuses it.
+    Callers that consume exactly one output (e.g. results only) should
+    pass persist=False to keep the top-k limit pushdown against the raw
+    scan and skip the cache bookkeeping.  Teardown:
+    ``QueryResult.unpersist()``.
     """
-    from dogsheep_beta_spark.operators import facets as facet_ops
-
     filtered = apply_filters(search_index, plan)
     if scored is not None:
         # C2 — attach relevance by joining scored docs back on the pk.
@@ -237,20 +183,4 @@ def compile_plan(
     if persist:
         filtered = filtered.persist(StorageLevel.MEMORY_AND_DISK)
     results = order_results(filtered, plan, has_rank=scored is not None)
-
-    def _build_facets():
-        d = {
-            c: facet_ops.column_facet(filtered, c, facet_size)
-            for c in facet_ops.FACET_COLUMNS
-        }
-        d["timestamp"] = facet_ops.date_facet(
-            filtered, "timestamp", facet_size
-        )
-        return d
-
-    return QueryResult(
-        results=results,
-        filtered=filtered,
-        facets=LazyFacets(_build_facets),
-        persisted=persist,
-    )
+    return QueryResult(results=results, filtered=filtered, persisted=persist)

@@ -7,7 +7,8 @@ timestamp desc, limit 100; on FTS syntax error retry with escape_fts.
 Spark flow: parse q → compile MATCH over postings → BM25-score the
 phrase hits → semi-join to the boolean doc-set → join back to
 search_index on the pk (C2) → filters + order + limit via the shared
-QueryPlan compiler.  Count + facets reuse the same filtered set.
+QueryPlan compiler.  Count + facets reuse the same filtered set, which
+a search request persists.
 """
 
 from __future__ import annotations
@@ -85,18 +86,17 @@ def search_query(
     index_df: DataFrame,
     fts: FtsIndex,
     plan: QueryPlan,
-    facet_size: int = 30,
-    persist: bool = True,
 ) -> QueryResult:
-    """Compile one search request end-to-end (results/count/facets)."""
+    """Compile one search request end-to-end (results/count/facets).
+
+    Only a search persists its filtered set: it carries the MATCH join,
+    which its results and its count/facet aggregate would each re-run
+    uncached.  A timeline request's filtered set is a filter over the
+    loaded index, cheaper to scan twice than to cache."""
     if not plan.is_search:
-        return compile_plan(
-            index_df, plan, scored=None, facet_size=facet_size, persist=persist
-        )
+        return compile_plan(index_df, plan, scored=None, persist=False)
     scored = scored_docs(fts, plan.q, type_filter=plan.type)
-    return compile_plan(
-        index_df, plan, scored=scored, facet_size=facet_size, persist=persist
-    )
+    return compile_plan(index_df, plan, scored=scored, persist=True)
 
 
 def search(index_df: DataFrame, fts: FtsIndex, q: str, **plan_kwargs) -> DataFrame:

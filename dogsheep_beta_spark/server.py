@@ -13,7 +13,8 @@ One SparkSession, one loaded index, one FTS build serve EVERY request
 them in, the handler closes over them.  ``ThreadingHTTPServer`` +
 Spark's thread-safe job submission means concurrent requests simply
 become concurrent Spark jobs; per-request work is the compiled page
-plan (persisted filtered set, broadcast hydration joins), so request
+plan (results, one count-and-facets aggregate, broadcast hydration
+joins; a search persists its filtered set for the request), so request
 latency is the same as one ``beta_page`` call.
 """
 

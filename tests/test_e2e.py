@@ -75,11 +75,10 @@ def test_full_request_lifecycle(spark):
     assert [r["key"] for r in res_not.results.collect()] == ["c1"]
 
     # count + facets off the SAME filtered set
-    count = facet_ops.filtered_count(res.filtered)
-    assert count == 3 and intcomma(count) == "3"
-    type_facet = {
-        r["value"]: r["count"] for r in res.facets["type"].collect()
-    }
+    count, facets = facet_ops.count_and_facets(res.filtered)
+    assert count == facet_ops.filtered_count(res.filtered) == 3
+    assert intcomma(count) == "3"
+    type_facet = {d["value"]: d["count"] for d in facets["type"]}
     assert type_facet == {"emails.db/emails": 2, "commits.db/commits": 1}
 
     # hydration: one batched query per type, not per row (C3)

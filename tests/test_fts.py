@@ -12,6 +12,7 @@ from dogsheep_beta_spark.functions.tokenizer import (
     porter_stem,
     tokenize_py,
 )
+from dogsheep_beta_spark.operators import facets as facet_ops
 from dogsheep_beta_spark.operators.fts_index import build_fts_index
 from dogsheep_beta_spark.plans.match import ParseError, parse_match, escape_match, Phrase, And, Not
 from dogsheep_beta_spark.plans.query import QueryPlan
@@ -232,7 +233,8 @@ def test_search_with_filters_and_sort(plugin_index, fts):
     ts = [r["timestamp"] for r in res.results.collect()]
     assert ts == sorted(ts)
     # facets computed on the same filtered (matched) set
-    type_facet = {r["value"]: r["count"] for r in res.facets["type"].collect()}
+    _, facets = facet_ops.count_and_facets(res.filtered)
+    type_facet = {d["value"]: d["count"] for d in facets["type"]}
     assert type_facet == {"emails.db/emails": 2, "github.db/commits": 1}
 
 

@@ -855,3 +855,46 @@ def test_read_parts_rejects_unknown_partition_column(spark, tmpdir):
     df = srv._read_parts(spark, [(d, "type=docs")])
     assert df.schema["type"].dataType.simpleString() == "string"
     assert {r["type"] for r in df.collect()} == {"docs"}
+
+
+def test_timeline_page_count_and_facets_job_budget(page_ctx, monkeypatch):
+    """A page's count plus four facets is one aggregate: at most 2
+    Spark jobs (a count and four facet collects took 10).  A timeline
+    request persists nothing; a search request still persists its
+    filtered set, which results and the aggregate share."""
+    import dogsheep_beta_spark.page as page_mod
+    from dogsheep_beta_spark.plans.query import QueryPlan, apply_filters
+    from dogsheep_beta_spark.plans.search import search_query
+
+    spark, idx, fts = page_ctx
+    sc = spark.sparkContext
+    group = "test-page-facet-budget"
+    sc.setJobGroup(group, "count + four facets")
+    try:
+        count, facets = page_mod.build_page_facets(
+            apply_filters(idx, QueryPlan()), {}, ""
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert count == 4
+    assert [f["name"] for f in facets] == ["type", "category", "is_public", "timestamp"]
+
+    persistent = lambda: sc._jsc.getPersistentRDDs().size()  # noqa: E731
+    during = []
+    real = page_mod.build_page_facets
+
+    def spy(*args, **kwargs):
+        during.append(persistent())
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(page_mod, "build_page_facets", spy)
+    before = persistent()
+    html = page_mod.beta_page(spark, idx, fts, {"type": "github.db/commits"})
+    assert "Got 2 results" in html
+    assert during == [before] and persistent() == before
+
+    assert search_query(idx, fts, QueryPlan()).persisted is False
+    with search_query(idx, fts, QueryPlan(q="things")) as res:
+        assert res.persisted is True

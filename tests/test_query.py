@@ -1,5 +1,7 @@
 """Timeline / filter / facet semantics (SURVEY §2 B3-B4, D1-D4, F2-F4)."""
 
+import pytest
+
 from dogsheep_beta_spark.plans.query import QueryPlan, timeline_query, compile_plan
 from dogsheep_beta_spark.operators import facets as facet_ops
 from dogsheep_beta_spark.schema import categories_df
@@ -59,22 +61,25 @@ def test_sort_overrides(plugin_index):
 
 def test_count_and_facets(plugin_index, spark):
     res = compile_plan(plugin_index, QueryPlan())
-    assert facet_ops.filtered_count(res.filtered) == 4
+    count, facets = facet_ops.count_and_facets(res.filtered)
+    assert count == facet_ops.filtered_count(res.filtered) == 4
 
-    type_facet = {r["value"]: r["count"] for r in res.facets["type"].collect()}
+    type_facet = {d["value"]: d["count"] for d in facets["type"]}
     assert type_facet == {"emails.db/emails": 2, "github.db/commits": 2}
 
-    is_public_facet = {r["value"]: r["count"] for r in res.facets["is_public"].collect()}
+    is_public_facet = {d["value"]: d["count"] for d in facets["is_public"]}
     assert is_public_facet == {0: 2, 1: 2}
 
-    date_facet = {str(r["value"]): r["count"] for r in res.facets["timestamp"].collect()}
+    date_facet = {str(d["value"]): d["count"] for d in facets["timestamp"]}
     assert date_facet == {"2020-08-01": 2, "2020-08-02": 2}
 
 
 def test_category_facet_labels(plugin_index, spark):
     # C4: FK label expansion via broadcast join — facet shows "created".
     res = compile_plan(plugin_index, QueryPlan())
-    labeled = facet_ops.facet_with_labels(res.facets["category"], categories_df(spark))
+    labeled = facet_ops.facet_with_labels(
+        facet_ops.column_facet(res.filtered, "category"), categories_df(spark)
+    )
     rows = {r["label"]: r["count"] for r in labeled.collect() if r["value"] is not None}
     assert rows == {"created": 2}
 
@@ -105,7 +110,8 @@ def test_search_and_facets_share_one_filtered_set(plugin_index):
         (r["type"], r["key"]) for r in res.filtered.select("type", "key").collect()
     }
     assert result_keys == filtered_keys  # same doc set feeds both
-    type_facet = {r["value"]: r["count"] for r in res.facets["type"].collect()}
+    _, facets = facet_ops.count_and_facets(res.filtered)
+    type_facet = {d["value"]: d["count"] for d in facets["type"]}
     assert sum(type_facet.values()) == len(filtered_keys)
     assert type_facet == {"emails.db/emails": 1}
 
@@ -134,50 +140,68 @@ def test_non_numeric_facet_args_match_nothing(spark, plugin_index):
     assert apply_filters(plugin_index, QueryPlan(category="1.5")).count() == 0
 
 
-def test_facets_built_lazily_and_exactly_once(plugin_index):
-    """r12 request-path optimization contract (plans/query.py:LazyFacets):
-    a request that never consumes facets must not pay their plan
-    construction; a request that does must see the exact eager-build
-    dict, built once no matter how many accesses."""
-    from dogsheep_beta_spark.plans.query import LazyFacets, compile_plan
+def _facets_one_by_one(df, size):
+    """The per-output path ``count_and_facets`` replaces: one count and
+    four facet collects."""
+    facets = {
+        c: [r.asDict() for r in facet_ops.column_facet(df, c, size).collect()]
+        for c in facet_ops.FACET_COLUMNS
+    }
+    facets["timestamp"] = [
+        r.asDict() for r in facet_ops.date_facet(df, "timestamp", size).collect()
+    ]
+    return facet_ops.filtered_count(df), facets
 
-    calls = []
 
-    def builder():
-        calls.append(1)
-        return {"a": 1, "b": 2}
+def test_count_and_facets_matches_per_facet_path(spark):
+    """One GROUPING SETS aggregate == filtered_count + column_facet x3 +
+    date_facet, as full ordered lists: NULL column values keep their
+    ranking slot, NULL timestamps leave the date set, both ``T`` and
+    space separators bucket by day, and count ties at the facet_size
+    cut break on the value (nulls last)."""
+    rows = [
+        # date counts 3 / 2 / 2 / 2 / 1: a 3-way tie across a cut of 3
+        ("a", 1, None, "2020-01-01T01:00:00"),
+        ("a", 1, None, "2020-01-01 02:00:00"),
+        ("a", 1, None, "2020-01-01T03:00:00"),
+        ("b", None, 1, "2020-01-04 00:00:00"),
+        ("b", None, 1, "2020-01-04T00:00:01"),
+        ("b", 2, 0, "2020-01-03T00:00:00"),
+        ("c", 2, 1, "2020-01-03 00:00:00"),
+        ("c", 3, 0, "2020-01-02T00:00:00"),
+        ("c", 3, None, "2020-01-02 00:00:00"),
+        ("d", None, 1, "2020-01-05T00:00:00"),
+        ("d", 4, 1, None),
+    ]
+    schema = "type string, category int, is_public int, timestamp string"
+    df = spark.createDataFrame(rows, schema)
+    for size in (3, 2, 30):
+        assert facet_ops.count_and_facets(df, size) == _facets_one_by_one(df, size)
+    count, facets = facet_ops.count_and_facets(df, 3)
+    assert count == 11
+    # the tie at the cut and the NULL that takes a slot are both exercised
+    assert [d["value"] for d in facets["category"]] == [1, None, 2]
+    assert [d["value"] for d in facets["is_public"]] == [1, None, 0]
+    assert facet_ops.count_and_facets(df.filter("false"), 3) == (
+        0, {"type": [], "category": [], "is_public": [], "timestamp": []}
+    )
 
-    lf = LazyFacets(builder)
-    assert calls == []  # construction alone builds nothing
-    assert lf["a"] == 1 and "b" in lf and dict(lf.items()) == {"a": 1, "b": 2}
-    assert len(lf) == 2 and lf.get("missing") is None
-    assert calls == [1]  # every access path shares ONE build
-
-    # r13 (ADVICE r12): the C fast-path idioms a dict SUBCLASS would
-    # silently answer with empty internal storage must all see the
-    # built mapping — LazyFacets is a Mapping wrapper, so dict(),
-    # {**}, ==, and copy() route through keys()/__getitem__.
-    want = {"a": 1, "b": 2}
-    for fresh_probe in (
-        lambda m: dict(m),
-        lambda m: {**m},
-        lambda m: m.copy(),
-    ):
-        fresh = LazyFacets(builder)
-        assert fresh_probe(fresh) == want
-    fresh = LazyFacets(builder)
-    assert fresh == want and LazyFacets(builder) == LazyFacets(builder)
-    assert calls[0] == 1  # (sanity: builder list still shared above)
-
-    # through the real request path: compile_plan's facets must stay
-    # unbuilt until consumed, then equal the eager column facets
-    from dogsheep_beta_spark.operators import facets as facet_ops
-    from dogsheep_beta_spark.plans.query import QueryPlan
-
-    res = compile_plan(plugin_index, QueryPlan(), persist=False)
-    assert isinstance(res.facets, LazyFacets)
-    assert not res.facets._built  # untouched until a consumer asks
-    got = {r["value"]: r["count"] for r in res.facets["type"].collect()}
-    want_df = facet_ops.column_facet(res.filtered, "type", 30)
-    want = {r["value"]: r["count"] for r in want_df.collect()}
-    assert got == want and res.facets._built
+    # an unparsable timestamp: both paths raise under ANSI mode; without
+    # it both keep its NULL-date group
+    dirty = spark.createDataFrame(
+        rows + [("e", 5, 1, "not a date"), ("e", 5, 1, "2020-13-45")], schema
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    if ansi == "true":
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            facet_ops.count_and_facets(dirty, 3)
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            _facets_one_by_one(dirty, 3)
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        for size in (3, 30):
+            got = facet_ops.count_and_facets(dirty, size)
+            assert got == _facets_one_by_one(dirty, size)
+        assert {"value": None, "count": 2} in got[1]["timestamp"]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
